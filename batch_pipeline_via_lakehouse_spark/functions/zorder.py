@@ -1,14 +1,11 @@
 """Vectorized Z-order (Morton) and Hilbert curve keys.
 
-Space-filling-curve clustering keys computed the way the north rule mandates:
-whole-column NumPy bit ops inside Arrow pandas UDFs — the same vectorized
-pattern as the reference's only UDF (grouped-map pandas UDF at
-`src/elt/gold/fact_daily_ohlcv.py:93-147`), never per-row Python.
-
-Division of labor with the JVM: hashing of string dims (source, doc_id) is
-done by Spark's built-in ``xxhash64`` (codegen'd, JVM-side); Python only sees
-fixed-width integers and interleaves bits. The UDFs return int64 (63 usable
-bits), so the key sorts natively in Spark without decimal/binary overhead.
+Space-filling-curve clustering keys computed as whole-column NumPy bit ops
+over Arrow data, never per-row Python. The clustering rewrite
+(``operators/clustering.py``) reads Parquet with pyarrow inside its tasks:
+string dims are hashed with a vectorized FNV-1a over the Arrow string
+buffers, the numeric dim is min/max-scaled, and the curve kernels interleave
+the resulting fixed-width integers. Keys are int64 (63 usable bits).
 
 All magic constants are the standard public-domain Morton spreading masks;
 the Hilbert transform is the classic Wikipedia xy2d rotation algorithm,
@@ -18,10 +15,6 @@ vectorized with boolean masks.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 _U = np.uint64
 
@@ -116,119 +109,9 @@ def _to_bits(v: np.ndarray, lo: float, hi: float, bits: int) -> np.ndarray:
     return np.clip(scaled * ((1 << bits) - 1), 0, (1 << bits) - 1).astype(np.uint64)
 
 
-def _hash_bits(h: pd.Series, bits: int) -> np.ndarray:
-    """Top ``bits`` of a signed-int64 xxhash64 column (uniform by design)."""
-    return h.to_numpy(dtype=np.int64).view(np.uint64) >> _U(64 - bits)
-
-
-def zkey3_udf(lo: float, hi: float):
-    """pandas UDF: zkey(n_tok, xxhash64(source), xxhash64(doc_id)) -> int64."""
-
-    @pandas_udf("long")
-    def zkey(n_tok: pd.Series, h_src: pd.Series, h_doc: pd.Series) -> pd.Series:
-        a = _to_bits(n_tok.to_numpy(), lo, hi, 21)
-        b = _hash_bits(h_src, 21)
-        c = _hash_bits(h_doc, 21)
-        return pd.Series(morton3(a, b, c).astype(np.int64))
-
-    return zkey
-
-
-def zkey2_udf(lo: float, hi: float):
-    """pandas UDF: zkey(n_tok, xxhash64(doc_id)) -> int64 (2-dim)."""
-
-    @pandas_udf("long")
-    def zkey(n_tok: pd.Series, h_doc: pd.Series) -> pd.Series:
-        a = _to_bits(n_tok.to_numpy(), lo, hi, 31)
-        b = _hash_bits(h_doc, 31)
-        return pd.Series(morton2(a, b).astype(np.int64))
-
-    return zkey
-
-
-def hkey2_udf(lo: float, hi: float):
-    """pandas UDF: Hilbert key over (n_tok, xxhash64(doc_id)) -> int64."""
-
-    @pandas_udf("long")
-    def hkey(n_tok: pd.Series, h_doc: pd.Series) -> pd.Series:
-        a = _to_bits(n_tok.to_numpy(), lo, hi, 31)
-        b = _hash_bits(h_doc, 31)
-        return pd.Series(hilbert2(a, b, order=31).astype(np.int64))
-
-    return hkey
-
-
 # ---------------------------------------------------------------------------
-# JVM-native Morton keys: the same spread-bits pipeline as the NumPy kernels,
-# expressed with built-in shiftleft/&/| so it stays inside whole-stage codegen
-# and costs nothing extra when repartitionByRange evaluates the key twice
-# (range-sampling pass + shuffle pass). Tests assert bit-equality with the
-# Arrow-UDF kernels; Hilbert keeps the Arrow path (its per-bit rotation loop
-# has no sane SQL form).
-
-_SPREAD3 = [
-    (32, 0x1F00000000FFFF),
-    (16, 0x1F0000FF0000FF),
-    (8, 0x100F00F00F00F00F),
-    (4, 0x10C30C30C30C30C3),
-    (2, 0x1249249249249249),
-]
-_SPREAD2 = [
-    (16, 0x0000FFFF0000FFFF),
-    (8, 0x00FF00FF00FF00FF),
-    (4, 0x0F0F0F0F0F0F0F0F),
-    (2, 0x3333333333333333),
-    (1, 0x5555555555555555),
-]
-
-
-def _spread_sql(c: Column, steps: list[tuple[int, int]], in_mask: int) -> Column:
-    x = c.bitwiseAND(F.lit(in_mask))
-    for shift, mask in steps:
-        x = (x.bitwiseOR(F.shiftleft(x, shift))).bitwiseAND(F.lit(mask))
-    return x
-
-
-def _scale_sql(c: Column, lo: float, hi: float, bits: int) -> Column:
-    span = hi - lo
-    if span <= 0:
-        return F.lit(0).cast("long")
-    scaled = (c.cast("double") - F.lit(lo)) / F.lit(span) * F.lit(float((1 << bits) - 1))
-    return F.least(
-        F.greatest(scaled, F.lit(0.0)), F.lit(float((1 << bits) - 1))
-    ).cast("long")
-
-
-def _hash_bits_sql(c: Column, bits: int) -> Column:
-    # logical right shift of the signed xxhash64 == NumPy's uint64 >> shift
-    return F.shiftrightunsigned(c, 64 - bits)
-
-
-def zkey3_sql(numeric_col: str, h1: Column, h2: Column, lo: float, hi: float) -> Column:
-    a = _scale_sql(F.col(numeric_col), lo, hi, 21)
-    b = _hash_bits_sql(h1, 21)
-    c = _hash_bits_sql(h2, 21)
-    return (
-        _spread_sql(a, _SPREAD3, 0x1FFFFF)
-        .bitwiseOR(F.shiftleft(_spread_sql(b, _SPREAD3, 0x1FFFFF), 1))
-        .bitwiseOR(F.shiftleft(_spread_sql(c, _SPREAD3, 0x1FFFFF), 2))
-    )
-
-
-def zkey2_sql(numeric_col: str, h1: Column, lo: float, hi: float) -> Column:
-    a = _scale_sql(F.col(numeric_col), lo, hi, 31)
-    b = _hash_bits_sql(h1, 31)
-    return _spread_sql(a, _SPREAD2, 0x7FFFFFFF).bitwiseOR(
-        F.shiftleft(_spread_sql(b, _SPREAD2, 0x7FFFFFFF), 1)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Fully-native kernels (no JVM in the loop): used by the staged-exchange
-# clustering rewrite, where tasks read Parquet with pyarrow directly and the
-# string dims never pass through Spark expressions. FNV-1a is vectorized over
-# the Arrow string buffers: one NumPy pass per byte position (doc ids are
-# short), never per row.
+# Clustering key: FNV-1a is vectorized over the Arrow string buffers — one
+# NumPy pass per byte position (doc ids are short), never per row.
 
 _FNV_OFFSET = np.uint64(0xCBF29CE484222325)
 _FNV_PRIME = np.uint64(0x100000001B3)
@@ -273,8 +156,9 @@ def native_cluster_key(
     lo: float,
     hi: float,
 ) -> np.ndarray:
-    """Clustering key from NumPy inputs (same curve kernels as the UDF path):
-    ``dim_hashes`` are uint64 hashes of the non-partition string dims."""
+    """Clustering key from NumPy inputs: ``dim_hashes`` are uint64 hashes of
+    the non-partition string dims (two -> 3-dim Morton, one -> 2-dim Morton
+    or Hilbert; Hilbert keys the first hash only)."""
     if mode == "zorder" and len(dim_hashes) == 2:
         a = _to_bits(numeric, lo, hi, 21)
         return morton3(a, dim_hashes[0] >> _U(43), dim_hashes[1] >> _U(43)).astype(np.int64)
@@ -284,30 +168,4 @@ def native_cluster_key(
     if mode == "hilbert":
         a = _to_bits(numeric, lo, hi, 31)
         return hilbert2(a, dim_hashes[0] >> _U(33), order=31).astype(np.int64)
-    raise ValueError(f"unknown clustering mode {mode!r}")
-
-
-def cluster_key_column(
-    mode: str,
-    numeric_col: str,
-    hash_cols: list[str],
-    lo: float,
-    hi: float,
-    impl: str = "jvm",
-) -> Column:
-    """Build the clustering-key Column. ``impl='jvm'`` (default) keeps the
-    whole key inside codegen; ``impl='arrow'`` routes the bit interleave
-    through the vectorized NumPy pandas UDFs (bit-identical, tested)."""
-    if mode == "zorder" and impl == "jvm":
-        if len(hash_cols) == 2:
-            return zkey3_sql(numeric_col, F.xxhash64(hash_cols[0]), F.xxhash64(hash_cols[1]), lo, hi)
-        return zkey2_sql(numeric_col, F.xxhash64(hash_cols[0]), lo, hi)
-    if mode == "zorder" and len(hash_cols) == 2:
-        return zkey3_udf(lo, hi)(
-            F.col(numeric_col), F.xxhash64(hash_cols[0]), F.xxhash64(hash_cols[1])
-        )
-    if mode == "zorder":
-        return zkey2_udf(lo, hi)(F.col(numeric_col), F.xxhash64(hash_cols[0]))
-    if mode == "hilbert":
-        return hkey2_udf(lo, hi)(F.col(numeric_col), F.xxhash64(hash_cols[0]))
     raise ValueError(f"unknown clustering mode {mode!r}")

@@ -31,6 +31,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.scan import partition_key
+from ..table.arrow_io import stats_columns
 from ..table.catalog import Table
 from ..table.format import DataFile
 from .commitlog import CommitLog
@@ -141,7 +142,6 @@ def compact(
     small_threshold: float = 0.75,
     min_files_per_bin: int = 2,
     job_id: str | None = None,
-    max_concurrency: int | None = None,
     fail_after_partitions: int | None = None,  # test hook: simulate a kill
 ) -> dict:
     """Run compaction; returns a report. Re-run with the same ``job_id`` to
@@ -172,24 +172,19 @@ def compact(
 
     has_tokens = "n_tok" in table.schema.fieldNames()
     commit_mutex = threading.Lock()
-    if max_concurrency is None:
-        # a rewrite group is one single-task write (coalesce) — saturating the
-        # cluster means one in-flight group per core, like Iceberg's
-        # max-concurrent-file-group-rewrites
-        max_concurrency = max(4, spark.sparkContext.defaultParallelism)
 
     # --- bundle groups into few wide jobs ----------------------------------
     # One Spark job per file group pays fixed job latency + driver py4j work
     # per group; with dozens of groups that fixed-cost pool caps scaling.
     # Instead: pack groups into <= n_bundles byte-balanced bundles; a bundle
-    # is ONE job — a union of per-group coalesce(1) branches, so each task
-    # rewrites exactly one group into exactly one output file (task index i
-    # <-> group i, recovered from the part-NNNNN file name for lineage).
+    # is ONE job whose task i rewrites group i into exactly one output file
+    # and returns i with its manifest entry for lineage.
     # Split into multiple bundles (finer resume + commit granularity) only
     # when each still holds >= 8 task waves; below that the extra commits +
-    # collects cost more than the granularity is worth.
+    # collects cost more than the granularity is worth. At most one bundle
+    # per 4 cores.
     par = max(1, spark.sparkContext.defaultParallelism)
-    n_bundles = max(1, min(max(1, max_concurrency // 4), len(todo) // (8 * par)))
+    n_bundles = max(1, min(max(1, par // 4), len(todo) // (8 * par)))
     bundles: list[list[tuple[str, list[DataFile]]]] = [[] for _ in range(n_bundles)]
     bundle_bytes = [0] * n_bundles
     for gk, files in todo:
@@ -205,14 +200,7 @@ def compact(
     import uuid as _uuid
     from urllib.parse import quote
 
-    tracked = [
-        f.name for f in table.schema.fields
-        if f.dataType.typeName() not in ("array", "map", "struct")
-    ]
-    sum_cols = [
-        f.name for f in table.schema.fields
-        if f.dataType.typeName() in ("integer", "long", "float", "double")
-    ]
+    tracked, sum_cols = stats_columns(table.schema)
 
     def run_bundle(bundle: list[tuple[str, list[DataFile]]]) -> None:
         t0 = time.monotonic()

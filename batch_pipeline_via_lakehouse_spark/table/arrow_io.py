@@ -17,10 +17,25 @@ import os
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 from .format import DataFile
 
 _META_SCHEMA = "path string, partition string, rows long, bytes long, stats string"
+
+
+def stats_columns(schema: StructType) -> tuple[list[str], list[str]]:
+    """The manifest stats rule: ``(tracked, sums)`` — min/max/null counts for
+    every non-nested column, and a sum for every numeric one."""
+    tracked = [
+        f.name for f in schema.fields
+        if f.dataType.typeName() not in ("array", "map", "struct")
+    ]
+    sums = [
+        f.name for f in schema.fields
+        if f.dataType.typeName() in ("integer", "long", "float", "double")
+    ]
+    return tracked, sums
 
 
 def _arrow_stats(tbl, tracked: list[str], sum_cols: list[str]) -> dict:
@@ -59,24 +74,11 @@ def arrow_rewrite_job(
     tracked: list[str],
     sum_cols: list[str],
     zstd_level: int = 1,  # parquet-cpp's zstd default; rewrites are steady-state CPU
-    sort_by: list[str] | None = None,
-    drop_cols: list[str] | None = None,
-    split_extra_cols: list[str] | None = None,
 ) -> list[DataFile]:
     """Write ``df`` (already partitioned the way the caller wants) as one
     native-parquet file per (task, identity-partition value); returns
-    manifest entries. The whole rewrite is ONE Spark job.
-
-    ``sort_by`` sorts each task's table Arrow-side before writing — cheaper
-    than a JVM sortWithinPartitions for maintenance rewrites because the data
-    is leaving for Python anyway and the JVM sort's unsafe buffers are what
-    drive GC pressure at high task counts. ``drop_cols`` removes transient
-    key columns after the sort. ``split_extra_cols`` additionally split the
-    task's output into one file per value group (e.g. precomputed range-cell
-    ids) without appearing in the partition path or the output schema."""
+    manifest entries. The whole rewrite is ONE Spark job."""
     from urllib.parse import quote
-
-    split_cols = [*partition_cols, *(split_extra_cols or [])]
 
     def task(batches: Iterator) -> Iterator:
         import numpy as np
@@ -92,12 +94,10 @@ def arrow_rewrite_job(
         if not batch_list:
             return
         tbl = pa.Table.from_batches(batch_list)
-        if sort_by:
-            tbl = tbl.sort_by([(c, "ascending") for c in sort_by])
 
-        if split_cols:
-            keys = tbl.select(split_cols).to_pandas()
-            groups = keys.groupby(split_cols, sort=True, dropna=False).indices
+        if partition_cols:
+            keys = tbl.select(partition_cols).to_pandas()
+            groups = keys.groupby(partition_cols, sort=True, dropna=False).indices
             parts = []
             for pv, idx in groups.items():
                 pv_tuple = pv if isinstance(pv, tuple) else (pv,)
@@ -107,13 +107,7 @@ def arrow_rewrite_job(
 
         out = []
         for seq, (pv_tuple, sub) in enumerate(parts):
-            if drop_cols:
-                sub = sub.drop_columns(drop_cols)
-            if split_extra_cols:
-                sub = sub.drop_columns([c for c in split_extra_cols if c in sub.column_names])
-            partition = dict(
-                zip(partition_cols, [str(v) for v in pv_tuple[: len(partition_cols)]])
-            )
+            partition = dict(zip(partition_cols, [str(v) for v in pv_tuple]))
             dirs = "/".join(f"_p_{c}={quote(str(v), safe='')}" for c, v in partition.items())
             rel_dir = os.path.join(commit_dir, dirs) if dirs else commit_dir
             os.makedirs(os.path.join(table_root, rel_dir), exist_ok=True)

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .arrow_io import arrow_rewrite_job, stats_columns
 from .format import (
     DataFile,
     Snapshot,
@@ -321,14 +322,7 @@ class Table:
         writer.parquet(commit_dir)
 
         paths = sorted(glob.glob(os.path.join(commit_dir, "**", "*.parquet"), recursive=True))
-        tracked = [
-            f.name for f in self.schema.fields if f.dataType.typeName() not in ("array", "map", "struct")
-        ]
-        sum_cols = [
-            f.name
-            for f in self.schema.fields
-            if f.dataType.typeName() in ("integer", "long", "float", "double")
-        ]
+        tracked, sum_cols = stats_columns(self.schema)
         stats = collect_file_stats(spark, paths, tracked, sum_cols)
         files: list[DataFile] = []
         for p in paths:
@@ -350,19 +344,10 @@ class Table:
         """Append via executor-side native parquet writes (table/arrow_io):
         tasks write their own zstd files and return manifest entries — no JVM
         writer, no post-hoc stats pass. Same commit semantics as append()."""
-        from .arrow_io import arrow_rewrite_job
-
         out = conform_schema(df, self.schema)
         if num_files:
             out = out.repartition(num_files)
-        tracked = [
-            f.name for f in self.schema.fields
-            if f.dataType.typeName() not in ("array", "map", "struct")
-        ]
-        sums = [
-            f.name for f in self.schema.fields
-            if f.dataType.typeName() in ("integer", "long", "float", "double")
-        ]
+        tracked, sums = stats_columns(self.schema)
         files = arrow_rewrite_job(
             out, self.root, os.path.join("data", uuid.uuid4().hex),
             self.partition_cols, tracked, sums,

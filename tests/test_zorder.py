@@ -1,15 +1,20 @@
 """M2: Z/Hilbert kernels vs slow reference impls + clustering rewrite effects."""
 
+import os
+
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
 
 from batch_pipeline_via_lakehouse_spark.datagen import TOKEN_SCHEMA, token_table_df
 from batch_pipeline_via_lakehouse_spark.functions.checksums import content_checksum
 from batch_pipeline_via_lakehouse_spark.functions.zorder import (
+    fnv1a64,
     hilbert2,
     hilbert2_inverse,
     morton2,
     morton3,
+    native_cluster_key,
 )
 from batch_pipeline_via_lakehouse_spark.operators.clustering import cluster
 from batch_pipeline_via_lakehouse_spark.sources.scan import Pred, prune_files
@@ -55,9 +60,32 @@ def test_hilbert_roundtrip_and_locality():
     assert np.all(steps == 1)
 
 
-@pytest.mark.parametrize("mode", ["zorder", "hilbert"])
-def test_cluster_preserves_content_and_enables_skipping(spark, tmp_path, mode):
-    t = Table.create(str(tmp_path / f"t-{mode}"), TOKEN_SCHEMA, partition_by=["source"])
+def _assert_files_sorted_by_cluster_key(t, mode, hash_cols=("source", "doc_id")):
+    """Every output file is internally sorted by the key cluster() computed:
+    ``native_cluster_key`` over the non-partition dims, scaled by the global
+    n_tok min/max (the same bounds derivation cluster() uses)."""
+    files = t.live_files()
+    dims = [c for c in hash_cols if c not in t.partition_cols]
+    lo = float(min(f.stat("n_tok", "min") for f in files))
+    hi = float(max(f.stat("n_tok", "max") for f in files))
+    for f in files:
+        tbl = pq.read_table(os.path.join(t.root, f.path), columns=["n_tok", *dims])
+        k = native_cluster_key(
+            mode, tbl.column("n_tok").to_numpy(), [fnv1a64(tbl.column(d)) for d in dims], lo, hi
+        )
+        assert np.all(np.diff(k) >= 0), f.path
+
+
+@pytest.mark.parametrize(
+    "mode,partition_by",
+    [
+        pytest.param("zorder", ["source"], id="zorder"),
+        pytest.param("hilbert", ["source"], id="hilbert"),
+        pytest.param("zorder", [], id="zorder-unpartitioned"),
+    ],
+)
+def test_cluster_preserves_content_and_enables_skipping(spark, tmp_path, mode, partition_by):
+    t = Table.create(str(tmp_path / f"t-{mode}"), TOKEN_SCHEMA, partition_by=partition_by)
     for k in range(3):
         t.append(token_table_df(spark, 800, seed=200 + k), num_files=3)
     before = content_checksum(t.scan(spark))
@@ -68,6 +96,7 @@ def test_cluster_preserves_content_and_enables_skipping(spark, tmp_path, mode):
 
     assert content_checksum(t.scan(spark)) == before
     assert content_checksum(t.scan(spark, snapshot_id=pre_sid)) == before
+    _assert_files_sorted_by_cluster_key(t, mode)
 
     # file-skipping: a narrow n_tok band should prune most files in the
     # biggest partition ('web'), where pre-cluster every file spanned the range
@@ -75,6 +104,32 @@ def test_cluster_preserves_content_and_enables_skipping(spark, tmp_path, mode):
     if len(web_files) >= 3:
         pruned = prune_files(web_files, [Pred("n_tok", "between", 100, 120)])
         assert len(pruned) < len(web_files)
+
+
+def test_cluster_merges_mixed_writer_partition(spark, tmp_path):
+    """One partition holds files from both writers: the JVM writer
+    (``append``) stores ``ts`` as INT96, read back as ``timestamp[ns]``, and
+    the Arrow writer (``append_native``) as ``timestamp[us, tz=UTC]``. The
+    rewrite must merge them into the table's own types without changing
+    content."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructField, StructType, TimestampType
+
+    schema = StructType([*TOKEN_SCHEMA.fields, StructField("ts", TimestampType(), True)])
+    t = Table.create(str(tmp_path / "t"), schema, partition_by=["source"])
+
+    def rows(start):
+        return token_table_df(spark, 300, seed=31, start=start).withColumn(
+            "ts", F.expr("timestamp_micros(1700000000000000 + cast(n_tok as long) * 1000003)")
+        )
+
+    t.append(rows(0), num_files=2)
+    t.append_native(rows(300), num_files=2)
+    before = content_checksum(t.scan(spark))
+
+    report = cluster(spark, t, mode="zorder", target_bytes=2 * 1024 * 1024)
+    assert report["rows"] == 600
+    assert content_checksum(t.scan(spark)) == before
 
 
 def test_cluster_resume(spark, tmp_path):
@@ -89,71 +144,8 @@ def test_cluster_resume(spark, tmp_path):
     assert content_checksum(t.scan(spark)) == before
 
 
-def test_native_and_spark_cluster_impls_agree(spark, tmp_path):
-    """The staged-exchange (native) and DataFrame-shuffle (spark) rewrites
-    must preserve identical content; both must leave per-file key-sorted
-    layouts. Parity is asserted on the POST-cluster state of each impl (the
-    pre-cluster checksums of identically-seeded tables are trivially equal)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from batch_pipeline_via_lakehouse_spark.functions.zorder import (
-        fnv1a64,
-        native_cluster_key,
-    )
-
-    post = {}
-    tables = {}
-    for impl in ("native", "spark"):
-        t = Table.create(str(tmp_path / f"t-{impl}"), TOKEN_SCHEMA, partition_by=["source"])
-        t.append(token_table_df(spark, 1200, seed=77), num_files=4)
-        before = content_checksum(t.scan(spark))
-        cluster(spark, t, mode="zorder", target_bytes=2 * 1024 * 1024, impl=impl)
-        assert content_checksum(t.scan(spark)) == before
-        post[impl] = content_checksum(t.scan(spark))
-        tables[impl] = t
-    # cross-impl: identical post-cluster content, row totals, and partitions
-    assert post["native"] == post["spark"]
-    from batch_pipeline_via_lakehouse_spark.functions.zorder import cluster_key_column
-
-    for impl, t in tables.items():
-        files = t.live_files()
-        assert sum(f.rows for f in files) == 1200, impl
-        # every output file is internally sorted by that impl's cluster key
-        # (native keys dims with FNV-1a, spark with xxhash64 — different but
-        # equally valid curves); bounds = global n_tok min/max, the same
-        # derivation cluster() used
-        lo = min(f.stat("n_tok", "min") for f in files)
-        hi = max(f.stat("n_tok", "max") for f in files)
-        for f in files:
-            if impl == "native":
-                tbl = pq.read_table(os.path.join(t.root, f.path), columns=["n_tok", "doc_id"])
-                k = native_cluster_key(
-                    "zorder",
-                    tbl.column("n_tok").to_numpy(),
-                    [fnv1a64(tbl.column("doc_id"))],
-                    float(lo),
-                    float(hi),
-                )
-            else:
-                rows = (
-                    spark.read.parquet(os.path.join(t.root, f.path))
-                    .select(
-                        cluster_key_column(
-                            "zorder", "n_tok", ["doc_id"], float(lo), float(hi), impl="jvm"
-                        ).alias("k")
-                    )
-                    .collect()
-                )
-                k = np.array([r["k"] for r in rows], dtype=np.int64)
-            assert np.all(np.diff(k.astype(np.int64)) >= 0), (impl, f.path)
-
-
 def test_fnv1a64_deterministic_and_spread():
     import pyarrow as pa
-
-    from batch_pipeline_via_lakehouse_spark.functions.zorder import fnv1a64
 
     arr = pa.chunked_array([pa.array(["a", "bb", "", "doc-00042"]), pa.array(["a"])])
     h = fnv1a64(arr)
